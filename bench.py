@@ -61,7 +61,7 @@ HEADLINE = [
 # Keep safely under the driver's 2000-char stdout tail capture.
 MAX_LINE = 1800
 
-# Keys whose fixture is a cached on-disk sink (/tmp/dpas_* via _cache_dir):
+# Keys whose fixture is a cached on-disk sink (/tmp/dpas_* via versioned_cache_dir):
 # on a WARM pass the write is skipped (_SUCCESS sentinel), so their recorded
 # time measures read-back of the written layout, not the write itself. The
 # artifact carries this list; --cold clears the caches so pass 0 measures
@@ -131,13 +131,12 @@ def _cpu_calibration() -> float:
 
 def _clear_sink_caches(sf_dir: str) -> None:
     """Remove ONLY this sf_dir's sink caches. The cache dirs are named
-    ``dpas_{kind}_{tag}_{version}`` (caches.versioned_cache_dir /
-    ingest._cache_dir), so scoping the glob to the active tag leaves other
-    SF dirs' caches, the ship_package zips, and any concurrent test/driver
-    session's fixtures untouched — a blanket ``dpas_*`` rmtree raced those
-    mid-run. The tag comes from the caches module itself so the two can't
-    silently drift (a mismatched glob would record warm read-backs as
-    'cold')."""
+    ``dpas_{kind}_{tag}_{version}`` (caches.versioned_cache_dir), so
+    scoping the glob to the active tag leaves other SF dirs' caches, the
+    ship_package zips, and any concurrent test/driver session's fixtures
+    untouched — a blanket ``dpas_*`` rmtree raced those mid-run. The tag
+    comes from the caches module itself so the two can't silently drift (a
+    mismatched glob would record warm read-backs as 'cold')."""
     import glob
     import shutil
     import tempfile

@@ -1,6 +1,6 @@
 """Versioned tempdir caches for materialized fixtures (persisted indexes,
-landed sink layouts). One canonical implementation of the naming/eviction
-scheme `sources/ingest.py` established for its own fixtures:
+landed sink layouts, ingest round-trip files). The engine's one
+implementation of the cache naming/eviction scheme:
 
     {tempdir}/dpas_{kind}_{md5(sf_dir)[:10]}_{version}
 
@@ -12,9 +12,10 @@ scheme `sources/ingest.py` established for its own fixtures:
 - siblings minted by other code versions are evicted on access (each
   revision would otherwise strand a full copy of the fixture in tempdir).
 
-ingest.py keeps its original private copy (its version token is shared by
-bucketed-table names and JSON caches beyond this dir scheme); dedup.py and
-streaming/jobs.py use this helper."""
+Every module that caches a fixture under tempdir (sources/ingest.py,
+dedup.py, streaming/jobs.py, ...) names it through `versioned_cache_dir`.
+Bucketed catalog tables are not tempdir caches: they live in the
+warehouse dir, named by `sf_tag` alone (ingest's `_bucketed_name`)."""
 
 from __future__ import annotations
 
@@ -86,8 +87,9 @@ def manifest_hash(root: str) -> str:
 @functools.lru_cache(maxsize=None)
 def _module_version(module_file: str) -> str:
     """md5 over the owning module + tables.py + session.py — computed once
-    per process per module (the hand-rolled copies this replaces re-hashed
-    their whole module file on every call)."""
+    per process per module, and only when a driver names a cache dir
+    (executors import the package from the shipped zip, where the module
+    files cannot be opened)."""
     pkg = os.path.dirname(os.path.abspath(__file__))
     h = hashlib.md5()
     for path in (module_file, os.path.join(pkg, "tables.py"), os.path.join(pkg, "session.py")):

@@ -12,13 +12,12 @@ from __future__ import annotations
 
 import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from data_pipeline_aws_spark.caches import sf_tag
+from data_pipeline_aws_spark.caches import sf_tag, versioned_cache_dir
 from data_pipeline_aws_spark.registry import query
 from data_pipeline_aws_spark.tables import table
 
@@ -33,66 +32,15 @@ EVENTS_JSON_SCHEMA = T.StructType(
 )
 
 
-_CODE_VERSION_CACHE: str | None = None
-
-
-def _code_version() -> str:
-    """Version token folded into every materialized-cache dir name: the hash
-    of every module whose code shapes cache CONTENTS — this module's writers
-    plus tables.py (ts normalization feeding them) and session.py (session
-    settings active at write time). Any edit to any of them moves every
-    cache key, so a _SUCCESS-marked artifact written by older code can never
-    satisfy a newer read path (stale caches would otherwise mask write-path
-    bugs from the oracle sweep).
-
-    Computed LAZILY, never at import time: executors import this module
-    from the addPyFile'd package ZIP (module-level mapInPandas fns like
-    warc_parse_batches are cloudpickled by reference), where open(__file__)
-    is impossible — and only the driver's cache-dir naming needs it."""
-    global _CODE_VERSION_CACHE
-    if _CODE_VERSION_CACHE is None:
-        here = os.path.dirname(os.path.abspath(__file__))
-        pkg = os.path.dirname(here)
-        h = hashlib.md5()
-        for path in (
-            __file__,
-            os.path.join(pkg, "tables.py"),
-            os.path.join(pkg, "session.py"),
-        ):
-            with open(path, "rb") as f:
-                h.update(f.read())
-        _CODE_VERSION_CACHE = h.hexdigest()[:8]
-    return _CODE_VERSION_CACHE
-
-
-def _evict_stale_caches(prefix: str) -> None:
-    """Best-effort delete of sibling cache dirs minted by OTHER code
-    versions (`{prefix}_<other-version>`): each revision would otherwise
-    strand a full parquet/JSON copy of the fixture in tempdir forever."""
-    import shutil
-
-    parent = tempfile.gettempdir()
-    try:
-        names = os.listdir(parent)
-    except OSError:
-        return
-    base = os.path.basename(prefix)
-    for name in names:
-        if name.startswith(base + "_") and name != f"{base}_{_code_version()}":
-            shutil.rmtree(os.path.join(parent, name), ignore_errors=True)
-
-
-def _json_cache_dir(sf_dir: str) -> str:
-    tag = sf_tag(sf_dir)
-    prefix = os.path.join(tempfile.gettempdir(), f"dpas_json_events_{tag}")
-    _evict_stale_caches(prefix)
-    return f"{prefix}_{_code_version()}"
+def _cache_dir(kind: str, sf_dir: str) -> str:
+    """This module's fixture cache dir for ``kind`` (caches.versioned_cache_dir)."""
+    return versioned_cache_dir(kind, sf_dir, __file__)
 
 
 def events_as_json(spark: SparkSession, sf_dir: str) -> str:
     """Materialize the events table as JSON-lines (once per sf_dir) — the
     raw-arrival format of the reference's event pipeline."""
-    out = _json_cache_dir(sf_dir)
+    out = _cache_dir("json_events", sf_dir)
     marker = os.path.join(out, "_SUCCESS")
     if not os.path.exists(marker):
         e = table(spark, sf_dir, "events").select(
@@ -150,13 +98,6 @@ ORDERS_CSV_SCHEMA = T.StructType(
         T.StructField("o_orderpriority", T.StringType()),
     ]
 )
-
-
-def _cache_dir(kind: str, sf_dir: str) -> str:
-    tag = sf_tag(sf_dir)
-    prefix = os.path.join(tempfile.gettempdir(), f"dpas_{kind}_{tag}")
-    _evict_stale_caches(prefix)
-    return f"{prefix}_{_code_version()}"
 
 
 @query(
@@ -1032,7 +973,7 @@ def catalog_db(spark: SparkSession, sf_dir: str, *, analyze: bool = True) -> str
             spark.sql(
                 f"ANALYZE TABLE {db}.{t} COMPUTE STATISTICS FOR ALL COLUMNS"
             )
-    # CBO itself is enabled at session build (session.py — round-12 ADVICE:
+    # CBO itself is enabled by session.SQL_CONFS (round-12 ADVICE:
     # setting it here made planning execution-order dependent); this
     # function only creates/ANALYZEs the catalog entries.
     spark.conf.set(sentinel, "1")

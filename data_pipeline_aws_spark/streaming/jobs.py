@@ -52,7 +52,6 @@ def _stream_partitions(spark: SparkSession):
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table (bounded in tests; the same
     code tails an arrival directory in production)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     static_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     stream = (
         spark.readStream.schema(static_schema)
@@ -1100,7 +1099,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase watermark still advances only from observed purchases and
     the click watermark only from clicks. Equivalence measured, not
     argued: drained results asserted row-identical two-source vs shared
-    (tools/ssj_ab.py, symdiff 0 at sf0.1) and the oracle passes on the
+    (symdiff 0 at sf0.1, commit 0b25a0d) and the oracle passes on the
     diff; progress telemetry confirms sources 2 -> 1."""
     ev = _stream_events(spark, sf_dir)
     purchases = (
@@ -1176,10 +1175,10 @@ def q_stream_stream_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     two stream sources plus the no-data flush batches — per-trigger
     state-store commits (4 stores x partitions x sides), not data
     volume, set the floor (the 4-point curve is ~flat, exponent 0.09).
-    Round-12 bounded experiment (STREAM_TUNE.json,
-    tools/stream_left_tune.py): state-store provider (RocksDB) and
-    per-query state-partition overrides measured head-to-head per the
-    round-11 verdict order #4 adoption rule (>=1.5x or keep).
+    Round-12 bounded experiment (results in STREAM_TUNE.json): state-store
+    provider (RocksDB) and per-query state-partition overrides measured
+    head-to-head per the round-11 verdict order #4 adoption rule (>=1.5x
+    or keep).
 
     The drained result lands as a versioned-cache layout (round-11
     advisory): the memory sink is already one driver-side copy, so the
@@ -1387,7 +1386,6 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     raw = spark.read.parquet(f"{sf_dir}/events.parquet")
     tmp = tempfile.mkdtemp(prefix="dpas_sess_stream_")
     shutil.copy(f"{sf_dir}/events.parquet", os.path.join(tmp, "batch0_events.parquet"))

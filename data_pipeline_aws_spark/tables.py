@@ -34,44 +34,34 @@ ALWAYS_BROADCAST = frozenset({"region", "nation"})
 
 
 @lru_cache(maxsize=None)
+def _parquet_footers(path: str) -> tuple:
+    """Footer metadata of every part of the parquet table at ``path`` (one
+    file, or a directory of ``*.parquet`` parts). Footer-only read,
+    memoized per path — a few ms once per (sf_dir, table)."""
+    import pyarrow.parquet as pq
+
+    if os.path.isdir(path):
+        parts = [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
+    else:
+        parts = [path]
+    return tuple(pq.ParquetFile(p).metadata for p in parts)
+
+
 def _scan_width(path: str) -> int:
     """How many tasks a parquet scan of ``path`` can possibly get: row
     groups are Spark's split atoms (a file with one row group is one task
-    no matter what maxPartitionBytes says). Footer-only read, memoized per
-    path — a few ms once per (sf_dir, table)."""
-    import pyarrow.parquet as pq
-
-    if os.path.isdir(path):
-        parts = [
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        ]
-    else:
-        parts = [path]
-    return sum(pq.ParquetFile(p).metadata.num_row_groups for p in parts)
+    no matter what maxPartitionBytes says)."""
+    return sum(m.num_row_groups for m in _parquet_footers(path))
 
 
-@lru_cache(maxsize=None)
 def table_rows(sf_dir: str, name: str) -> int:
     """Exact row count of a table from its parquet footer(s) — free (no
-    Spark job, metadata only), memoized per (sf_dir, table). The
-    scale-adaptive partition-width inputs (e.g. q_item_item_recs' pair-join
-    width) derive from this so per-task state stays bounded at any SF
-    instead of trusting AQE's byte-advisory coalescing to keep hash-build
-    sides small (guide §5: more partitions = smaller per-task state)."""
-    import pyarrow.parquet as pq
-
-    path = f"{sf_dir}/{name}.parquet"
-    if os.path.isdir(path):
-        parts = [
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        ]
-    else:
-        parts = [path]
-    return sum(pq.ParquetFile(p).metadata.num_rows for p in parts)
+    Spark job, metadata only). The scale-adaptive partition-width inputs
+    (e.g. q_item_item_recs' pair-join width) derive from this so per-task
+    state stays bounded at any SF instead of trusting AQE's byte-advisory
+    coalescing to keep hash-build sides small (guide §5: more partitions =
+    smaller per-task state)."""
+    return sum(m.num_rows for m in _parquet_footers(f"{sf_dir}/{name}.parquet"))
 
 
 def spread(spark: SparkSession, df: DataFrame, sf_dir: str, name: str) -> DataFrame:
@@ -102,16 +92,15 @@ def table(
 
     ``events.ts`` is parquet TIMESTAMP(NANOS); how it decodes depends on the
     Spark version: ≤4.0 with ``spark.sql.legacy.parquet.nanosAsLong=true``
-    it arrives as epoch-nanos LongType; 4.1+ ignores that flag and reads it
-    as a µs-truncated TIMESTAMP_NTZ. Both are normalized here to a µs
-    TimestampType (session timezone is pinned UTC, so the NTZ cast is
-    value-preserving) — the exact truncation DuckDB applies when it reads
-    the same file into its µs-native TIMESTAMP, so oracle comparisons stay
-    bit-identical across versions.
+    (set in ``session.SQL_CONFS``) it arrives as epoch-nanos LongType; 4.1+
+    ignores that flag and reads it as a µs-truncated TIMESTAMP_NTZ. Both
+    are normalized here to a µs TimestampType (session timezone is pinned
+    UTC, so the NTZ cast is value-preserving) — the exact truncation DuckDB
+    applies when it reads the same file into its µs-native TIMESTAMP, so
+    oracle comparisons stay bit-identical across versions.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")

@@ -37,7 +37,7 @@ def _weighted_avg_price():
     def fn(price: pd.Series, qty: pd.Series) -> float:
         return float(np.sum(price * qty) / np.sum(qty))
 
-    return pandas_udf(fn, "double", F.PandasUDFType.GROUPED_AGG)
+    return pandas_udf(fn, "double")  # Series, Series -> scalar hints: grouped-agg
 
 
 def log_price_score(extendedprice, discount) -> Column:

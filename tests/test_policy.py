@@ -225,3 +225,78 @@ def test_parity_artifact_covers_the_whole_registry():
         assert not stale, f"{tag}: artifact rows for unregistered keys: {sorted(stale)}"
         bad = {k: s for k, s in rows.items() if s != "pass"}
         assert not bad, f"{tag}: non-pass parity rows: {bad}"
+
+
+_HANDED_SESSION_CONFS = r"""
+import json
+import sys
+
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+
+from data_pipeline_aws_spark.session import tune_session
+
+spark = SparkSession.builder.master("local[1]").config("spark.ui.enabled", "false").getOrCreate()
+tune_session(spark)
+keys = set(json.loads(sys.argv[2])) | {k for k, _ in spark.sql("SET").collect()}
+
+
+def effective(k):
+    try:
+        return spark.conf.get(k)
+    except Exception:
+        return None
+
+
+print(json.dumps({k: effective(k) for k in sorted(keys) if k.startswith("spark.sql.")}))
+spark.stop()
+"""
+
+
+def test_handed_session_matches_get_spark_sql_confs(spark):
+    """A session the engine is handed — built plain, the way the driver
+    builds it, then passed through tune_session — carries the same
+    effective spark.sql.* config as the get_spark session: the SQL confs
+    live in one table applied one way. Only the shuffle width may differ;
+    the caller owns it."""
+    import json
+    import subprocess
+    import sys
+
+    def effective(k):
+        try:
+            return spark.conf.get(k)
+        except Exception:
+            return None
+
+    mine = [k for k, _ in spark.sql("SET").collect() if k.startswith("spark.sql.")]
+    proc = subprocess.run(
+        [sys.executable, "-c", _HANDED_SESSION_CONFS, str(PKG.parent), json.dumps(mine)],
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    handed = json.loads(proc.stdout.strip().splitlines()[-1])
+    handed.pop("spark.sql.shuffle.partitions", None)
+    built = {k: effective(k) for k in handed}
+    assert handed == built
+    from data_pipeline_aws_spark.session import SQL_CONFS
+
+    assert set(SQL_CONFS) <= set(handed)
+
+
+def test_sql_confs_set_only_by_the_session_table():
+    """Every engine-wide SQL conf is set in one place, session.SQL_CONFS:
+    a per-call ``conf.set`` of the same key elsewhere would be a second
+    copy that can drift from the table."""
+    from data_pipeline_aws_spark.session import SQL_CONFS
+
+    offenders = [
+        f"{path}: {key}"
+        for path, src in _sources().items()
+        if not path.endswith("session.py")
+        for key in SQL_CONFS
+        if re.search(rf"(conf\.set|\.config)\(\s*\"{re.escape(key)}\"", src)
+    ]
+    assert not offenders, offenders

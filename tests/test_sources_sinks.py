@@ -363,3 +363,28 @@ def test_warcgz_parser_rejects_broken_member_framing(spark):
         run(one[:-4])
     with pytest.raises(ValueError, match="per-record framing violated"):
         run(two_in_one)
+
+
+def test_ingest_cache_dir_spares_same_version_staging(tmp_path):
+    """Resolving an ingest cache dir evicts other code versions' siblings
+    but never a same-version `.build<pid>` staging dir: that is a
+    concurrent session's in-flight publish (q_warcgz_ingest stages and
+    renames), and deleting it would kill that session's write."""
+    import os
+    import shutil
+
+    from data_pipeline_aws_spark.sources.ingest import _cache_dir
+
+    sf_dir = str(tmp_path / "no_such_sf")  # a tag no real fixture uses
+    out = _cache_dir("evict_probe", sf_dir)
+    staging = f"{out}.build{os.getpid() + 1}"
+    stale = out.rsplit("_", 1)[0] + "_00000000"
+    try:
+        os.makedirs(staging)
+        os.makedirs(stale)
+        assert _cache_dir("evict_probe", sf_dir) == out
+        assert os.path.isdir(staging)
+        assert not os.path.exists(stale)
+    finally:
+        for d in (out, staging, stale):
+            shutil.rmtree(d, ignore_errors=True)

@@ -37,6 +37,7 @@ sys.path.insert(0, _REPO)
 from pyspark.sql import SparkSession  # noqa: E402
 
 import __spark_entry__ as entry_mod  # noqa: E402
+from data_pipeline_aws_spark.session import driver_memory  # noqa: E402
 from data_pipeline_aws_spark.tables import TABLES  # noqa: E402  - single source of truth
 
 
@@ -195,9 +196,7 @@ def main() -> None:
         .config("spark.ui.enabled", "false")
         # the sf1.0 probe OOMs a default-memory (1g) driver JVM; match
         # the package session helper's sizing
-        .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
-        )
+        .config("spark.driver.memory", driver_memory())
         # extreme-SF audits collect full result relations for hashing; the
         # 1g default result cap is a harness artifact, not a query property
         .config(
